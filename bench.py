@@ -105,9 +105,10 @@ def _bench_flat_1m(spark, sf_dir: str) -> dict:
     t0 = time.perf_counter()
     write_block_index(blocks, bidx_dir)
     block_build_sec = round(time.perf_counter() - t0, 4)
-    # 8 tasks × 4 files: per-task Python dispatch (~10-70 ms each on
-    # local mode) outweighs the tiny per-file matvec; a real cluster
-    # would use max_tasks=len(files)
+    # pinned at 8 tasks so timings stay comparable across rounds (the
+    # default sizes tasks by bytes); each extra mapInPandas task adds
+    # ~80-100 ms of Python dispatch on local[4], far more than the
+    # tiny per-file matvec
     bi_kw = dict(dim=len(q), k=10, max_tasks=8)
     for _ in range(3):  # warm: spool decode on first touch, then page cache
         block_index_topk(spark, bidx_dir, q, **bi_kw).collect()

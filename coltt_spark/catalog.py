@@ -30,6 +30,7 @@ import math
 import os
 import re
 import shutil
+import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass
 from typing import Any
@@ -336,10 +337,22 @@ class Collection:
         return df
 
     def _write_manifest(self) -> None:
-        tmp = os.path.join(self.root, "manifest.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(self.manifest.to_json(), f, indent=2)
-        os.replace(tmp, os.path.join(self.root, "manifest.json"))
+        """Publish the manifest atomically: each writer fills its own
+        uniquely named temporary file beside ``manifest.json`` and
+        renames it over, so two writers never interleave into one file
+        and a crashed writer leaves only an orphan temp file, never a
+        torn manifest. The file is created like ``open(…, "w")`` would
+        (mode 0666 less the umask), not 0600 as ``mkstemp`` would."""
+        tmp = os.path.join(self.root, f"manifest.{uuid.uuid4().hex}.tmp")
+        fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o666)
+        try:
+            with os.fdopen(fd, "w") as f:
+                json.dump(self.manifest.to_json(), f, indent=2)
+            os.replace(tmp, os.path.join(self.root, "manifest.json"))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
 
     # -- DML ----------------------------------------------------------
 

@@ -19,6 +19,7 @@ array left-to-right in element order.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -46,10 +47,23 @@ def sql_double_array(xs: Sequence[float]) -> str:
     parts = []
     for x in xs:
         v = float(x)
-        if v != v or v in (float("inf"), float("-inf")):
+        if not math.isfinite(v):
             raise ValueError(f"non-finite literal {v!r} in vector literal")
-        parts.append(repr(v) + "D")
+        parts.append(sql_double(v))
     return "array(" + ",".join(parts) + ")"
+
+
+def sql_double(x: float) -> str:
+    """One double as Spark-SQL text that parses back to the same value:
+    ``repr`` plus the ``D`` suffix (bit-exact for finite values). The
+    non-finite values, whose ``repr`` would give the unparseable
+    ``infD`` / ``nanD``, render as string casts."""
+    v = float(x)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return "CAST('Infinity' AS DOUBLE)" if v > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return repr(v) + "D"
 
 
 def dot_fold_sql(a_sql: str, b_sql: str) -> str:

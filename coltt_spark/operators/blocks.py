@@ -598,24 +598,46 @@ def ivf_files(path: str, centroids: Sequence[int]) -> list[str]:
     return out
 
 
-def default_max_tasks(spark: SparkSession) -> int:
-    """Default task-group count for block-index scans. Local mode pays
-    ~10-70 ms Python dispatch per task, so fewer, fatter tasks win;
-    a real cluster wants one task per file. Heuristic: a quarter of
-    the parallelism, floor 8 — override with COLTT_BLOCK_MAX_TASKS."""
-    env = os.environ.get("COLTT_BLOCK_MAX_TASKS")
-    if env:
-        return int(env)
-    return max(8, spark.sparkContext.defaultParallelism // 4)
+def _scan_task_count(
+    sizes: Sequence[int], parallelism: int, split_bytes: int
+) -> int:
+    """Task count for a block-index scan, sized by bytes like every
+    Spark file scan: one task per ``split_bytes``
+    (``spark.sql.files.maxPartitionBytes``) of index files, capped at
+    the parallelism and the file count, at least one. A no-op
+    ``mapInPandas`` job takes about 240 ms with one task on
+    ``local[4]`` (a 4-core host) and about 900 ms with eight, while
+    an IVF probe reads a few hundred KB: a small scan runs as ONE
+    task, and a scan of many large files still spreads across every
+    core."""
+    by_bytes = -(-sum(sizes) // max(1, split_bytes))
+    return max(1, min(len(sizes), parallelism, by_bytes))
 
 
-def _file_group_df(spark: SparkSession, files: list[str], max_tasks: int | None):
+def _file_group_df(
+    spark: SparkSession,
+    files: list[str],
+    max_tasks: int | None,
+    queries_per_file: Sequence[int] | None = None,
+):
     """One row per task, each carrying a ';'-joined group of file
     paths — built with ``parallelize(…, n)`` so the per-query plan has
-    NO shuffle, just one narrow Python stage. ``max_tasks`` trades
-    per-task dispatch overhead (~10-70 ms each on local mode) against
-    per-task scan size; at cluster scale pass len(files)."""
-    n_tasks = min(len(files), max_tasks or default_max_tasks(spark))
+    NO shuffle, just one narrow Python stage. The task count comes
+    from the files' bytes (:func:`_scan_task_count`) unless the
+    caller pins ``max_tasks`` (at most one task per file). A batch
+    scan passes ``queries_per_file``: a file scored for B queries
+    does B times the matmul work of a single-query scan, so it counts
+    B times its bytes and a compute-bound batch still spreads across
+    cores."""
+    if max_tasks:
+        n_tasks = min(len(files), max_tasks)
+    else:
+        weights = queries_per_file or [1] * len(files)
+        n_tasks = _scan_task_count(
+            [os.path.getsize(f) * w for f, w in zip(files, weights)],
+            spark.sparkContext.defaultParallelism,
+            spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes(),
+        )
     groups = [files[i::n_tasks] for i in range(n_tasks)]
     rdd = spark.sparkContext.parallelize([(";".join(g),) for g in groups], n_tasks)
     return spark.createDataFrame(rdd, "paths string")
@@ -933,7 +955,10 @@ def block_index_topk_batch(
     )
     if not files:
         return spark.createDataFrame([], out_schema)
-    fdf = _file_group_df(spark, files, max_tasks)
+    fdf = _file_group_df(
+        spark, files, max_tasks,
+        [len(qids) if fq is None else len(fq.get(p, ())) for p in files],
+    )
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import re as _re

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from coltt_spark.filters import compile_filter
 from coltt_spark.functions.vector import score as score_expr
-from coltt_spark.functions.vector import vector_distance
+from coltt_spark.functions.vector import sql_double, vector_distance
 
 
 def _paginate_topk(scored: DataFrame, limit: int, offset: int, tie_break: str) -> DataFrame:
@@ -295,17 +295,18 @@ def _wide_dist(
             acc = f"({acc} + {t})"
         return acc
 
+    qs = [sql_double(x) for x in q]
     if distance == "cosine":
         qn = math.sqrt(sum(x * x for x in q)) or 1.0
-        dot = fold([f"(`{prefix}{i}` * {q[i]!r}D)" for i in range(dim)])
-        return F.expr(f"abs(1.0D - ({dot} / (`_vnorm` * {qn!r}D)))")
+        dot = fold([f"(`{prefix}{i}` * {qs[i]})" for i in range(dim)])
+        return F.expr(f"abs(1.0D - ({dot} / (`_vnorm` * {sql_double(qn)})))")
     if distance == "euclidean":
         s = fold(
-            [f"((`{prefix}{i}` - {q[i]!r}D) * (`{prefix}{i}` - {q[i]!r}D))" for i in range(dim)]
+            [f"((`{prefix}{i}` - {qs[i]}) * (`{prefix}{i}` - {qs[i]}))" for i in range(dim)]
         )
         return F.expr(f"sqrt({s})")
     if distance == "manhattan":
-        return F.expr(fold([f"abs(`{prefix}{i}` - {q[i]!r}D)" for i in range(dim)]))
+        return F.expr(fold([f"abs(`{prefix}{i}` - {qs[i]})" for i in range(dim)]))
     raise ValueError(f"unknown distance {distance!r}")
 
 
@@ -329,9 +330,9 @@ def vertex_search_wide(
     JVM-side (r14-opt, guide §4: the Column fold marshaled ~4 py4j
     calls per dimension). The text replicates the Python ``sum``
     fold exactly — leading integer ``0`` accumulator, left-assoc
-    adds, ``repr`` doubles — so the parsed tree is the identical
-    Add/Multiply chain; ``expr=False`` keeps the Column twin, pinned
-    bit-exact by tests/test_expr_parity.py."""
+    adds, ``sql_double`` literals — so the parsed tree is the
+    identical Add/Multiply chain; ``expr=False`` keeps the Column
+    twin, pinned bit-exact by tests/test_expr_parity.py."""
     import math
 
     q = [float(x) for x in query]

@@ -18,6 +18,7 @@ from coltt_spark.functions.text import (
     tokens,
     utf8_byte_symbols,
 )
+from coltt_spark.functions.vector import sql_double
 from coltt_spark.sources.tables import ensure_parallelism
 
 # marker stopwords per language for the n-gram/stopword heuristic.
@@ -527,9 +528,10 @@ def _qc_step_aggs(w: list[float]) -> list[Column]:
     keeps a 1-ulp JVM-vs-DuckDB exp() divergence from flipping the
     gradient integer — then sum(CAST(round((p - y)·xj·QC_QUANT) AS
     BIGINT)) per feature."""
-    z = f"(({w[0]!r}D * `_x0`) + ({w[1]!r}D * `_x1`))"
+    ws = [sql_double(x) for x in w]
+    z = f"(({ws[0]} * `_x0`) + ({ws[1]} * `_x1`))"
     for j in (2, 3):
-        z = f"({z} + ({w[j]!r}D * `_x{j}`))"
+        z = f"({z} + ({ws[j]} * `_x{j}`))"
     p = f"round(1.0D / (1.0D + exp(-{z})), 12)"
     return [
         F.expr(
@@ -581,7 +583,7 @@ def train_quality_classifier(
             # the whole step's four gradient aggregates parse as SQL
             # text in ONE call each (r14-opt, guide §4 — the Column
             # form marshaled ~1.6k py4j round-trips per 3-step
-            # construction); `repr` round-trips the weight doubles
+            # construction); `sql_double` round-trips the weight doubles
             # bit-exactly, and the quantize-to-12-decimals /
             # integer-sum contract (see below) is unchanged — pinned
             # by tests/test_expr_parity.py and the oracle's replay of

@@ -3,8 +3,11 @@ scan, multi-block packing, and the written-index serving path."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
+
+import numpy as np
 
 from pyspark.sql import functions as F
 
@@ -636,3 +639,168 @@ def test_ivf_recall_monotone_in_nprobe(spark, tmp_path):
     assert recalls[0] < 1.0, recalls            # and the dial is real:
     # nprobe=1 on an overlapping corpus must actually miss neighbors,
     # otherwise this test would pass vacuously on a degenerate corpus
+
+
+def test_scan_task_count_sized_by_bytes():
+    """The block-scan task count follows bytes, like a Spark file scan:
+    tiny files run as one task; more bytes mean more tasks, capped at
+    the parallelism and at the file count."""
+    from coltt_spark.operators.blocks import _scan_task_count
+
+    mb = 1 << 20
+    split = 128 * mb
+    assert _scan_task_count([40_000] * 8, 4, split) == 1
+    assert _scan_task_count([100 * mb] * 2, 8, split) == 2
+    assert _scan_task_count([100 * mb] * 3, 8, split) == 3
+    assert _scan_task_count([100 * mb] * 40, 4, split) == 4  # parallelism cap
+    assert _scan_task_count([900 * mb], 8, split) == 1  # file-count cap
+    counts = [_scan_task_count([64 * mb] * 16, 32, b) for b in (512 * mb, 256 * mb, 64 * mb)]
+    assert counts == [2, 4, 16]
+
+
+def test_block_scans_independent_of_task_count(spark, tmp_path):
+    """Config independence: the byte-sized default (one task here), a
+    forced split by a small ``maxPartitionBytes``, and one task per
+    file all return identical rows from the single-query, batch and
+    filtered scans."""
+    import numpy as np
+
+    from pyspark.sql import types as T2
+
+    from coltt_spark.operators.blocks import (
+        _index_files,
+        block_index_scan,
+        block_index_topk_batch,
+    )
+
+    emb = load_table(spark, SF_CORRECT, "embeddings").withColumn(
+        "g", F.col("vec_id") % 3
+    )
+    q = _q(spark)
+    dim = len(q)
+    qs = {
+        int(r["vec_id"]): list(r["embedding"])
+        for r in emb.filter(F.col("vec_id") < 3).collect()
+    }
+    path = str(tmp_path / "idx")
+    write_block_index(
+        pack_blocks(
+            emb, id_col="vec_id", vec_col="embedding", dim=dim,
+            block_rows=200, payload_cols=["g"],
+        ),
+        path, n_files=6,
+    )
+    files = _index_files(path)
+    payload = T2.StructType([T2.StructField("g", T2.LongType())])
+
+    def run(max_tasks):
+        top = block_index_topk(spark, path, q, dim=dim, k=K, max_tasks=max_tasks)
+        batch = block_index_topk_batch(
+            spark, path, qs, dim=dim, k=K, distance="euclidean", max_tasks=max_tasks
+        )
+        filtered = block_index_scan(
+            spark, path, q, dim=dim, k=K, max_tasks=max_tasks,
+            payload_schema=payload,
+            payload_filter=lambda t: np.asarray(t.column("g")) != 0,
+        )
+        return (
+            [tuple(r) for r in top.collect()],
+            sorted(map(tuple, batch.collect())),
+            sorted(map(tuple, filtered.collect())),
+        )
+
+    default = run(None)
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(max(1, sum(map(os.path.getsize, files)) // 3)))
+    try:
+        split = run(None)
+    finally:
+        spark.conf.set(key, prev)
+    per_file = run(len(files))
+    assert default[0] and default[1] and default[2]
+    assert all(r[2] != 0 for r in default[2])
+    assert default == split == per_file
+
+
+def test_ivf_search_is_one_job_of_one_task(spark, tmp_path):
+    """Job-shape guard: a search on a small ivf collection reads a few
+    KB of probed block files, so it runs as one job of one task, not
+    one task per file."""
+    from coltt_spark.catalog import Catalog
+    from coltt_spark.schema import IndexField
+
+    rng = np.random.default_rng(5)
+    coll = Catalog(spark, str(tmp_path / "wh")).create_collection(
+        "shape", dim=8, distance="cosine",
+        fields=[IndexField("id", "string", primary_key=True)],
+        layout="ivf", ivf_centroids=8, ivf_nprobe=4,
+    )
+    coll.upsert(
+        [{"id": f"{i:04d}", "vector": rng.normal(size=8).tolist()} for i in range(400)]
+    )
+    coll.flush()
+    q = rng.normal(size=8).tolist()
+    coll.search(q, limit=10).collect()  # warm the spool
+    hits, tasks = _stage_tasks(spark, lambda: coll.search(q, limit=10).collect())
+    assert len(hits) == 10
+    assert tasks == [[1]], tasks
+
+
+def _stage_tasks(spark, action):
+    """Run ``action`` under a fresh job group; return its result and
+    the task count of every stage, per job."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-shape-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "scan job shape")
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    return out, [
+        [st.getStageInfo(sid).numTasks for sid in sorted(st.getJobInfo(j).stageIds)]
+        for j in sorted(st.getJobIdsForGroup(group))
+    ]
+
+
+def test_batch_scan_tasks_scale_with_batch_size(spark, tmp_path):
+    """A batch of B queries does B times the matmul work per byte, so
+    its scan counts B times the file bytes: with the split set to the
+    whole index, one query scans as one task and a batch of three as
+    three (capped at the parallelism)."""
+    from coltt_spark.operators.blocks import _index_files, block_index_topk_batch
+
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+    dim = len(_q(spark))
+    qs = {
+        int(r["vec_id"]): list(r["embedding"])
+        for r in emb.filter(F.col("vec_id") < 3).collect()
+    }
+    path = str(tmp_path / "idx")
+    write_block_index(
+        pack_blocks(emb, id_col="vec_id", vec_col="embedding", dim=dim, block_rows=200),
+        path, n_files=6,
+    )
+    files = _index_files(path)
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(sum(map(os.path.getsize, files))))
+    try:
+        shapes = {
+            b: _stage_tasks(
+                spark,
+                lambda b=b: block_index_topk_batch(
+                    spark, path, dict(list(qs.items())[:b]), dim=dim, k=K
+                ).collect(),
+            )[1]
+            for b in (1, 3)
+        }
+    finally:
+        spark.conf.set(key, prev)
+    par = spark.sparkContext.defaultParallelism
+    # the scan is the first stage of the first job; the rank() merge follows
+    assert shapes[1][0][0] == 1, shapes
+    assert shapes[3][0][0] == min(3, par, len(files)), shapes

@@ -1564,3 +1564,60 @@ def test_ivfpq_search_batch_equals_sequential_loop(catalog):
     coll.flush()
     check()
     check(refine=0)
+
+
+def test_manifest_write_uses_private_temp_file(catalog):
+    """Each manifest write fills its own temporary file, so a stale
+    ``manifest.json.tmp`` left by a crashed writer changes nothing, and
+    no temporary file remains after a flush."""
+    import json
+    import os
+
+    coll = catalog.create_collection("m", dim=8, distance="cosine", fields=FIELDS)
+    stale = os.path.join(coll.root, "manifest.json.tmp")
+    with open(stale, "w") as f:
+        f.write('{"torn": ')
+    coll.upsert(_rows(20))
+    coll.flush()
+    with open(stale) as f:
+        assert f.read() == '{"torn": '  # untouched, never published
+    os.remove(stale)
+    assert not [n for n in os.listdir(coll.root) if n.endswith(".tmp")]
+    with open(os.path.join(coll.root, "manifest.json")) as f:
+        assert json.load(f)["version"] == coll.manifest.version
+    catalog._open.clear()
+    assert catalog.get_collection("m").count() == 20
+
+
+def test_manifest_write_failure_removes_its_temp_file(catalog, monkeypatch):
+    import os
+
+    coll = catalog.create_collection("f", dim=8, distance="cosine", fields=FIELDS)
+    path = os.path.join(coll.root, "manifest.json")
+    with open(path) as f:
+        before = f.read()
+
+    def fail(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr("coltt_spark.catalog.json.dump", fail)
+    with pytest.raises(OSError, match="disk full"):
+        coll._write_manifest()
+    with open(path) as f:
+        assert f.read() == before
+    assert not [n for n in os.listdir(coll.root) if n.endswith(".tmp")]
+
+
+def test_manifest_mode_follows_umask(catalog):
+    import os
+    import stat
+
+    coll = catalog.create_collection("u", dim=8, distance="cosine", fields=FIELDS)
+    prev = os.umask(0o027)
+    try:
+        coll.upsert(_rows(5))
+        coll.flush()
+    finally:
+        os.umask(prev)
+    mode = os.stat(os.path.join(coll.root, "manifest.json")).st_mode
+    assert stat.S_IMODE(mode) == 0o640

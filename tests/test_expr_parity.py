@@ -120,6 +120,41 @@ def test_wide_layout_expr_equals_column_form(spark):
         ], dist
 
 
+def test_wide_dist_non_finite_query_matches_column_form(spark):
+    """A non-finite query component renders as a parseable cast, not
+    ``repr``'s ``infD`` / ``nanD``: the SQL-text distance equals the
+    Column twin on every distance, NaN and infinite results included."""
+    import math
+
+    from coltt_spark.functions.vector import sql_double
+    from coltt_spark.operators.search import vertex_search_wide, widen_vectors
+
+    assert sql_double(float("inf")) == "CAST('Infinity' AS DOUBLE)"
+    assert sql_double(float("-inf")) == "CAST('-Infinity' AS DOUBLE)"
+    assert sql_double(float("nan")) == "CAST('NaN' AS DOUBLE)"
+    emb = spark.createDataFrame(
+        [(i, [((i * 5 + j) % 7 - 3) * 0.5 for j in range(4)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+
+    def key(x):
+        return "nan" if math.isnan(x) else _bits(x)
+
+    for q in ([0.5, float("inf"), -1.0, 2.0], [0.5, 1.0, float("-inf"), 2.0]):
+        for dist in ("cosine", "euclidean", "manhattan"):
+            a, b = (
+                vertex_search_wide(
+                    widen_vectors(emb, vector_col="embedding", dim=4, expr=e),
+                    q, distance=dist, limit=12, tie_break="vec_id", expr=e,
+                ).collect()
+                for e in (True, False)
+            )
+            assert len(a) == 12
+            assert [(r["vec_id"], key(r["dist"])) for r in a] == [
+                (r["vec_id"], key(r["dist"])) for r in b
+            ], (q, dist)
+
+
 def test_lang_scorer_expr_equals_column_form(spark):
     """r14-opt tranche 2: the 11-language marker scorer + argmax CASE
     parse as SQL text with each score materialized once
